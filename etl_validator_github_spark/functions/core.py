@@ -1,5 +1,10 @@
 """Core column helpers.
 
+The rule-predicate helpers (``is_blank`` through ``charset_ok``) return
+Spark SQL boolean text, composed into the rule catalog and turned into
+expressions once with ``F.expr``; ``quantize`` and ``norm_token`` return
+Columns.
+
 The reference treats empty string and NULL as the same "blank"
 (newaugsver_clean.py:475-479 converts '' -> null post-validation; flat
 formats may render a null token). Every requiredness rule goes through
@@ -26,14 +31,26 @@ NAME_CHARSET_RE = r"^[A-Za-z .,'\-]*$"
 PHONE_CHARSET_RE = r"^[0-9 ().+\-x]*$"
 
 
-def is_blank(c: Column | str) -> Column:
-    """True when the value is NULL or empty/whitespace-only string."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.coalesce(F.trim(col.cast("string")), F.lit("")) == F.lit("")
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal.
+
+    Spark string literals treat backslash as an escape character, so both
+    backslash and the quote are escaped. Every message, charset and regex
+    that goes into rule or generator SQL text passes through here.
+    """
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def not_blank(c: Column | str) -> Column:
-    return ~is_blank(c)
+def is_blank(c: str) -> str:
+    """SQL: true when the value is NULL or empty/whitespace-only string.
+
+    ``c`` is a column name or SQL expression, as in every helper below.
+    """
+    return f"(coalesce(trim(CAST({c} AS STRING)), '') = '')"
+
+
+def not_blank(c: str) -> str:
+    return f"(NOT {is_blank(c)})"
 
 
 #: Allowed-character strings for the translate() fast path. Must stay in
@@ -54,41 +71,38 @@ _RE_TO_CHARS = {
 }
 
 
-def only_chars(c: Column | str, allowed: str) -> Column:
-    """True when the value contains only ``allowed`` characters.
+def only_chars(c: str, allowed: str) -> str:
+    """SQL: true when the value contains only ``allowed`` characters.
 
     ``translate`` is a single character-map pass — roughly an order of
     magnitude cheaper per row than a Java regex match, which matters when
     the rule catalog runs ~35 such checks per record at 100 TB. Blank and
     NULL values pass (requiredness is a separate rule).
     """
-    col = F.col(c) if isinstance(c, str) else c
-    return F.translate(F.coalesce(col.cast("string"), F.lit("")), allowed, "") == ""
+    return (f"(translate(coalesce(CAST({c} AS STRING), ''), "
+            f"{sql_str(allowed)}, '') = '')")
 
 
-def digits_exactly(c: Column | str, n: int) -> Column:
+def digits_exactly(c: str, n: int) -> str:
     """Exactly ``n`` characters, all digits (regex-free ``^[0-9]{n}$``)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return (F.length(col) == n) & only_chars(col, _DIGITS)
+    return f"(length({c}) = {n} AND {only_chars(c, _DIGITS)})"
 
 
-def digits_between(c: Column | str, lo: int, hi: int) -> Column:
+def digits_between(c: str, lo: int, hi: int) -> str:
     """``^[0-9]{lo,hi}$`` without the regex engine."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.length(col).between(lo, hi) & only_chars(col, _DIGITS)
+    return f"(length({c}) BETWEEN {lo} AND {hi} AND {only_chars(c, _DIGITS)})"
 
 
-def charset_ok(c: Column | str, pattern: str = SAFE_CHARSET_RE) -> Column:
+def charset_ok(c: str, pattern: str = SAFE_CHARSET_RE) -> str:
     """Charset predicate; blank values pass (requiredness is a separate rule).
 
     The three catalog charsets dispatch to the translate() fast path;
     unknown patterns fall back to rlike.
     """
-    col = F.col(c) if isinstance(c, str) else c
     allowed = _RE_TO_CHARS.get(pattern)
     if allowed is not None:
-        return only_chars(col, allowed)
-    return F.coalesce(col.cast("string"), F.lit("")).rlike(pattern)
+        return only_chars(c, allowed)
+    return f"(coalesce(CAST({c} AS STRING), '') RLIKE {sql_str(pattern)})"
 
 
 def quantize(c: Column | str, scale: int = 100) -> Column:

@@ -24,9 +24,10 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_validator_github_spark.functions.core import sql_str
 from etl_validator_github_spark.schema import COLUMNS, bankdata_schema
 
 _FIRST_NAMES = (
@@ -260,93 +261,87 @@ def generate_bankdata_distributed(
     """
     as_of = as_of or dt.date(2026, 3, 10)
     df = spark.range(0, n, 1, num_partitions or spark.sparkContext.defaultParallelism)
-    return df.select(*_bankdata_columns(seed, as_of, keep_id))
+    return df.selectExpr(*_build_bankdata_columns(seed, as_of, keep_id))
 
 
-#: Column-handle memo for the generator's 30-column projection. The
-#: expressions are a pure function of (seed, as_of, keep_id) — they
-#: reference only the range's ``id`` — while building them costs ~4k
-#: py4j round trips (~1 s of pure driver chatter per call, measured
-#: r13). Column handles are immutable expression trees that bind to a
-#: DataFrame only at use, and the py4j JVM outlives SparkSession
-#: stop/start within one interpreter, so per-process reuse is safe.
-#: This memoizes the QUERY EXPRESSION, never data: every run still
-#: generates and computes from scratch.
-#: Key includes the py4j gateway identity so a gateway relaunch
-#: rebuilds the handles instead of serving stale JavaObjects (ADVICE
-#: r13).
-_BANKDATA_COLS: dict[tuple[int, int, int, bool], list[Column]] = {}
+def id_hash_sql(k: int, seed: int) -> str:
+    """SQL: the k-th deterministic per-row uniform-ish integer stream over
+    the range's ``id`` (multiplicative hashing, always non-negative)."""
+    return f"pmod((id + {seed}) * {2654435761 + 40503 * k} + {k * 97}, {2**31 - 1})"
 
 
-def _bankdata_columns(seed: int, as_of: dt.date,
-                      keep_id: bool) -> list[Column]:
-    from etl_validator_github_spark.plans.session import gateway_token
-
-    key = (gateway_token(), seed, as_of.toordinal(), keep_id)
-    cols = _BANKDATA_COLS.get(key)
-    if cols is None:
-        cols = _BANKDATA_COLS[key] = _build_bankdata_columns(
-            seed, as_of, keep_id)
-    return cols
+def _pick(pool: tuple[str, ...], k: int, seed: int) -> str:
+    """SQL: one item of ``pool``, chosen by hash stream ``k``."""
+    items = ", ".join(sql_str(x) for x in pool)
+    return (f"element_at(array({items}), "
+            f"CAST({id_hash_sql(k, seed)} % {len(pool)} + 1 AS INT))")
 
 
 def _build_bankdata_columns(seed: int, as_of: dt.date,
-                            keep_id: bool) -> list[Column]:
-    def h(k: int):  # deterministic per-row uniform-ish integer stream
-        return F.pmod((F.col("id") + F.lit(seed)) * F.lit(2654435761 + 40503 * k) + F.lit(k * 97), F.lit(2**31 - 1))
+                            keep_id: bool) -> list[str]:
+    """The 30 bank columns (plus ``id`` if ``keep_id``) as SQL
+    ``<expr> AS <name>`` items over ``spark.range``."""
+    def h(k: int) -> str:
+        return id_hash_sql(k, seed)
 
-    org = (
-        F.when(h(1) % 10 == 0, "R")
-        .when(h(1) % 3 == 0, "M")
-        .when(h(1) % 3 == 1, "D")
-        .otherwise("P")
-    )
-    mode = F.when(org == "M", "EFT").when(h(2) % 2 == 0, "EFT").otherwise("CHK")
-    is_r = org == "R"
-    is_eft = (~is_r) & (mode == "EFT")
+    org = (f"(CASE WHEN {h(1)} % 10 = 0 THEN 'R' WHEN {h(1)} % 3 = 0 THEN 'M'"
+           f" WHEN {h(1)} % 3 = 1 THEN 'D' ELSE 'P' END)")
+    mode = f"(CASE WHEN {org} = 'M' THEN 'EFT' WHEN {h(2)} % 2 = 0 THEN 'EFT' ELSE 'CHK' END)"
+    is_r = f"({org} = 'R')"
+    is_eft = f"(NOT {is_r} AND {mode} = 'EFT')"
     # Unique payee digits derive from the row id itself (collision-free).
     payee = (
-        F.when(org == "M", F.concat(F.lit("MFR"), (F.col("id") % 900000 + 10).cast("string")))
-        .when(org == "D", F.concat(F.lit("DISP"), (F.col("id") % 90000 + 10).cast("string")))
-        .when(org == "P", F.concat(F.lit("PC"), (F.col("id") % 9000000 + 10).cast("string")))
-        .otherwise(F.concat(F.lit("R"), (F.col("id") % 90000000 + 10).cast("string")))
+        f"(CASE WHEN {org} = 'M' THEN concat('MFR', CAST(id % 900000 + 10 AS STRING))"
+        f" WHEN {org} = 'D' THEN concat('DISP', CAST(id % 90000 + 10 AS STRING))"
+        f" WHEN {org} = 'P' THEN concat('PC', CAST(id % 9000000 + 10 AS STRING))"
+        f" ELSE concat('R', CAST(id % 90000000 + 10 AS STRING)) END)"
     )
-    org_id = F.when(is_r, F.lpad((h(3) % 10**9 + F.col("id")).cast("string"), 10, "1")).otherwise(payee)
-    nine_digits = F.lpad((h(4) % 10**9).cast("string"), 9, "0")
-    blank = F.lit("")
+    org_id = (f"CASE WHEN {is_r} THEN lpad(CAST({h(3)} % {10**9} + id AS STRING), 10, '1')"
+              f" ELSE {payee} END")
+    nine_digits = f"lpad(CAST({h(4)} % {10**9} AS STRING), 9, '0')"
+    street = (f"concat(CAST({h(17)} % 9999 + 1 AS STRING), ' ', "
+              f"{_pick(_STREETS, 18, seed)})")
+    postal = f"CAST({h(21)} % 90000 + 10000 AS STRING)"
+    as_of_sql = sql_str(as_of.isoformat())
+
+    def if_not_r(then: str) -> str:
+        return f"CASE WHEN {is_r} THEN '' ELSE {then} END"
 
     return [
-        F.when(h(5) % 2 == 0, "A").otherwise("D").alias("RecordOperation"),
-        org.alias("OrganizationCode"),
-        payee.alias("PayeeID"),
-        org_id.alias("OrganizationIdentifier"),
-        F.element_at(F.array(*[F.lit(x) for x in _ORG_NAMES]), (h(6) % len(_ORG_NAMES) + 1).cast("int")).alias("OrganizationName"),
-        F.element_at(F.array(*[F.lit(x) for x in _ORG_NAMES]), (h(6) % len(_ORG_NAMES) + 1).cast("int")).alias("OrganizationLegalName"),
-        F.when(is_r, blank).otherwise(nine_digits).alias("OrganizationTIN"),
-        F.when(is_r, blank).when(h(7) % 2 == 0, "EIN").otherwise("SSN").alias("OrganizationTINType"),
-        F.when(is_r, blank).when(h(8) % 2 == 0, "P").otherwise("NP").alias("ProfitNonprofit"),
-        F.when(is_r | (h(9) % 5 == 0), blank)
-        .otherwise(F.concat((h(9) % 9 + 1).cast("string"), F.lpad((h(10) % 10**9).cast("string"), 9, "0")))
-        .alias("OrganizationNPI"),
-        F.when(is_r, blank).otherwise(mode).alias("PaymentMode"),
-        F.when(is_eft, F.lpad((h(11) % 10**9).cast("string"), 9, "0")).otherwise(blank).alias("RoutingTransitNumber"),
-        F.when(is_eft, (h(12) % 900000 + 100000).cast("string")).otherwise(blank).alias("AccountNumber"),
-        F.when(is_eft & (h(13) % 2 == 0), "CHKING").when(is_eft, "SAVING").otherwise(blank).alias("AccountType"),
-        F.lit(as_of.isoformat()).alias("EffectiveStartDate"),
-        F.when(h(14) % 5 == 0, F.date_format(F.date_add(F.lit(as_of), (h(15) % 90 + 1).cast("int")), "yyyy-MM-dd")).otherwise(blank).alias("EffectiveEndDate"),
-        F.when(is_r, blank).when(org == "M", F.when(h(16) % 2 == 0, "COR").otherwise(blank)).when(mode == "EFT", "COR").otherwise("PMT").alias("AddressCode"),
-        F.when(is_r, blank).otherwise(F.concat((h(17) % 9999 + 1).cast("string"), F.lit(" "), F.element_at(F.array(*[F.lit(x) for x in _STREETS]), (h(18) % len(_STREETS) + 1).cast("int")))).alias("AddressLine1"),
-        blank.alias("AddressLine2"),
-        F.when(is_r, blank).otherwise(F.element_at(F.array(*[F.lit(x) for x in _CITIES]), (h(19) % len(_CITIES) + 1).cast("int"))).alias("CityName"),
-        F.when(is_r, blank).otherwise(F.element_at(F.array(*[F.lit(x) for x in _STATES]), (h(20) % len(_STATES) + 1).cast("int"))).alias("State"),
-        F.when(is_r, blank).otherwise((h(21) % 90000 + 10000).cast("string")).alias("PostalCode"),
-        F.when(h(22) % 2 == 0, "AO").otherwise("DO").alias("ContactCode"),
-        F.when(is_r, blank).otherwise(F.element_at(F.array(*[F.lit(x) for x in _FIRST_NAMES]), (h(23) % len(_FIRST_NAMES) + 1).cast("int"))).alias("ContactFirstName"),
-        F.when(is_r, blank).otherwise(F.element_at(F.array(*[F.lit(x) for x in _LAST_NAMES]), (h(24) % len(_LAST_NAMES) + 1).cast("int"))).alias("ContactLastName"),
-        blank.alias("ContactTitle"),
-        F.concat((h(25) % 700 + 200).cast("string"), F.lit("-"), (h(26) % 800 + 200).cast("string"), F.lit("-"), (h(27) % 9000 + 1000).cast("string")).alias("ContactPhone"),
-        blank.alias("ContactFax"),
-        blank.alias("ContactOtherPhone"),
-        F.concat(F.lit("user"), F.col("id").cast("string"), F.lit("@example.com")).alias("ContactEmail"),
-        *([F.col("id")] if keep_id else []),
+        f"CASE WHEN {h(5)} % 2 = 0 THEN 'A' ELSE 'D' END AS RecordOperation",
+        f"{org} AS OrganizationCode",
+        f"{payee} AS PayeeID",
+        f"{org_id} AS OrganizationIdentifier",
+        f"{_pick(_ORG_NAMES, 6, seed)} AS OrganizationName",
+        f"{_pick(_ORG_NAMES, 6, seed)} AS OrganizationLegalName",
+        f"{if_not_r(nine_digits)} AS OrganizationTIN",
+        f"CASE WHEN {is_r} THEN '' WHEN {h(7)} % 2 = 0 THEN 'EIN' ELSE 'SSN' END AS OrganizationTINType",
+        f"CASE WHEN {is_r} THEN '' WHEN {h(8)} % 2 = 0 THEN 'P' ELSE 'NP' END AS ProfitNonprofit",
+        f"CASE WHEN {is_r} OR {h(9)} % 5 = 0 THEN ''"
+        f" ELSE concat(CAST({h(9)} % 9 + 1 AS STRING), lpad(CAST({h(10)} % {10**9} AS STRING), 9, '0'))"
+        f" END AS OrganizationNPI",
+        f"{if_not_r(mode)} AS PaymentMode",
+        f"CASE WHEN {is_eft} THEN lpad(CAST({h(11)} % {10**9} AS STRING), 9, '0') ELSE '' END AS RoutingTransitNumber",
+        f"CASE WHEN {is_eft} THEN CAST({h(12)} % 900000 + 100000 AS STRING) ELSE '' END AS AccountNumber",
+        f"CASE WHEN {is_eft} AND {h(13)} % 2 = 0 THEN 'CHKING' WHEN {is_eft} THEN 'SAVING' ELSE '' END AS AccountType",
+        f"{as_of_sql} AS EffectiveStartDate",
+        f"CASE WHEN {h(14)} % 5 = 0 THEN date_format(date_add(DATE {as_of_sql},"
+        f" CAST({h(15)} % 90 + 1 AS INT)), 'yyyy-MM-dd') ELSE '' END AS EffectiveEndDate",
+        f"CASE WHEN {is_r} THEN '' WHEN {org} = 'M' THEN (CASE WHEN {h(16)} % 2 = 0 THEN 'COR' ELSE '' END)"
+        f" WHEN {mode} = 'EFT' THEN 'COR' ELSE 'PMT' END AS AddressCode",
+        f"{if_not_r(street)} AS AddressLine1",
+        "'' AS AddressLine2",
+        f"{if_not_r(_pick(_CITIES, 19, seed))} AS CityName",
+        f"{if_not_r(_pick(_STATES, 20, seed))} AS State",
+        f"{if_not_r(postal)} AS PostalCode",
+        f"CASE WHEN {h(22)} % 2 = 0 THEN 'AO' ELSE 'DO' END AS ContactCode",
+        f"{if_not_r(_pick(_FIRST_NAMES, 23, seed))} AS ContactFirstName",
+        f"{if_not_r(_pick(_LAST_NAMES, 24, seed))} AS ContactLastName",
+        "'' AS ContactTitle",
+        f"concat(CAST({h(25)} % 700 + 200 AS STRING), '-', CAST({h(26)} % 800 + 200 AS STRING),"
+        f" '-', CAST({h(27)} % 9000 + 1000 AS STRING)) AS ContactPhone",
+        "'' AS ContactFax",
+        "'' AS ContactOtherPhone",
+        "concat('user', CAST(id AS STRING), '@example.com') AS ContactEmail",
+        *(["id"] if keep_id else []),
     ]

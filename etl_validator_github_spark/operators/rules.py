@@ -2,9 +2,12 @@
 
 Each rule is (name, applies_when, valid_predicate, error message). A row
 violates a rule when ``applies_when`` holds and ``valid_predicate`` does
-not. The whole catalog compiles into ONE projection producing an
-``array<string>`` of error messages — a single pass over the data, no
-per-rule shuffles, fully inside whole-stage codegen (SURVEY §4).
+not. Both predicates are Spark SQL text. The whole catalog compiles into ONE
+projection producing an ``array<string>`` of error messages — a single
+map-only pass over the data, no per-rule shuffles (SURVEY §4). That
+projection runs outside whole-stage codegen, because ``array_compact``
+lowers to a lambda; the boolean gate (``compile_any_violation``) and the
+per-rule counters (``validate.summarize_rule_violations``) stay inside it.
 
 Rule semantics are recovered from three mutually reinforcing public
 sources in the reference repo:
@@ -23,7 +26,6 @@ operators/reconcile.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column
@@ -34,13 +36,13 @@ from etl_validator_github_spark.functions.core import (
     ALPHA_CHARS,
     NAME_CHARSET_RE,
     PHONE_CHARSET_RE,
-    SAFE_CHARSET_RE,
     charset_ok,
     digits_between,
     digits_exactly,
     is_blank,
     not_blank,
     only_chars,
+    sql_str,
 )
 from etl_validator_github_spark.schema import R_BLANK_FIELDS
 
@@ -71,56 +73,46 @@ MSG_TINTYPE_INVALID = "Invalid OrganizationTinType for non-R records"
 class Rule:
     """One validation rule.
 
-    ``applies_when`` / ``valid`` are zero-arg builders returning Columns so
-    the catalog can be declared before any SparkSession exists. A row fails
-    the rule iff ``applies_when() AND NOT valid()`` (null-safe: a NULL
-    predicate counts as not-valid when the rule applies).
+    ``valid`` and ``applies_when`` are Spark SQL boolean expressions over
+    the row's columns, so the catalog is plain data that needs no
+    SparkSession. A row fails the rule iff ``applies_when AND NOT valid``
+    (null-safe: a NULL predicate counts as not-valid when the rule applies).
     """
 
     name: str
     message: str
-    valid: Callable[[], Column]
-    applies_when: Callable[[], Column] | None = None
+    valid: str
+    applies_when: str | None = None
 
-    def violation_expr(self) -> Column:
-        """Boolean: the rule applies and the row is not valid."""
-        ok = F.coalesce(self.valid(), F.lit(False))
+    def violation_sql(self) -> str:
+        """Boolean SQL: the rule applies and the row is not valid."""
+        ok = f"coalesce({self.valid}, false)"
         if self.applies_when is not None:
-            return F.coalesce(self.applies_when(), F.lit(False)) & ~ok
-        return ~ok
+            return f"(coalesce({self.applies_when}, false) AND NOT {ok})"
+        return f"(NOT {ok})"
 
-    def error_expr(self) -> Column:
-        return F.when(self.violation_expr(), F.lit(self.message))
-
-
-def _c(name: str) -> Column:
-    return F.col(name)
+    def error_sql(self) -> str:
+        return f"CASE WHEN {self.violation_sql()} THEN {sql_str(self.message)} END"
 
 
-def _org() -> Column:
-    return F.col("OrganizationCode")
+_MDP = "OrganizationCode IN ('M', 'D', 'P')"
+_DP = "OrganizationCode IN ('D', 'P')"
+_IS_R = "OrganizationCode = 'R'"
+_EFT = f"{_MDP} AND PaymentMode = 'EFT'"
+_CHK = f"{_MDP} AND PaymentMode = 'CHK'"
+_DATE_RE = r"^\d{4}-\d{2}-\d{2}$"
 
 
-def _mode() -> Column:
-    return F.col("PaymentMode")
+def _rlike(c: str, pattern: str) -> str:
+    return f"{c} RLIKE {sql_str(pattern)}"
 
 
-def _is_mdp() -> Column:
-    return _org().isin("M", "D", "P")
-
-
-def _is_r() -> Column:
-    return _org() == "R"
-
-
-def _date_ok(name: str) -> Column:
+def _date_ok(c: str) -> str:
     # Date columns may arrive as real dates or 'YYYY-MM-DD' strings; both
     # validate. try_to_date returns NULL (not error) for malformed strings.
-    c = _c(name)
-    return F.when(
-        c.cast("string").rlike(r"^\d{4}-\d{2}-\d{2}$"),
-        F.try_to_date(c.cast("string"), "yyyy-MM-dd").isNotNull(),
-    ).otherwise(F.lit(False))
+    s = f"CAST({c} AS STRING)"
+    return (f"(CASE WHEN {_rlike(s, _DATE_RE)} "
+            f"THEN try_to_date({s}, 'yyyy-MM-dd') IS NOT NULL ELSE false END)")
 
 
 def bankdata_rules() -> list[Rule]:
@@ -137,7 +129,7 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "recordoperation_enum",
             "RecordOperation must be one of A, C or D",
-            lambda: _c("RecordOperation").isin("A", "C", "D"),
+            "RecordOperation IN ('A', 'C', 'D')",
         )
     )
     # R2 OrganizationCode enum {M, D, P, R} (GEN:137-138, 314).
@@ -145,7 +137,7 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationcode_enum",
             "OrganizationCode must be one of M, D, P or R",
-            lambda: _org().isin("M", "D", "P", "R"),
+            "OrganizationCode IN ('M', 'D', 'P', 'R')",
         )
     )
     # R3 PayeeID: 2-9 chars, org-specific prefix, no specials
@@ -154,18 +146,21 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "payeeid_length",
             "PayeeID must be 2 to 9 characters",
-            lambda: not_blank("PayeeID") & F.length("PayeeID").between(2, 9),
+            f"{not_blank('PayeeID')} AND length(PayeeID) BETWEEN 2 AND 9",
         )
     )
     add(
         Rule(
             "payeeid_format",
             "PayeeID must be alphanumeric with a valid organization prefix",
-            lambda: F.when(_org() == "M", _c("PayeeID").rlike(r"^MFR[0-9]{1,6}$"))
-            .when(_org() == "D", _c("PayeeID").rlike(r"^DISP[0-9]{1,5}$"))
-            .when(_org() == "P", _c("PayeeID").rlike(r"^PC[0-9]{1,7}$"))
-            .otherwise(_c("PayeeID").rlike(r"^[A-Za-z0-9]{2,9}$")),
-            applies_when=lambda: _org().isin("M", "D", "P", "R"),
+            "CASE WHEN OrganizationCode = 'M' THEN "
+            + _rlike("PayeeID", r"^MFR[0-9]{1,6}$")
+            + " WHEN OrganizationCode = 'D' THEN "
+            + _rlike("PayeeID", r"^DISP[0-9]{1,5}$")
+            + " WHEN OrganizationCode = 'P' THEN "
+            + _rlike("PayeeID", r"^PC[0-9]{1,7}$")
+            + " ELSE " + _rlike("PayeeID", r"^[A-Za-z0-9]{2,9}$") + " END",
+            applies_when="OrganizationCode IN ('M', 'D', 'P', 'R')",
         )
     )
     # R3b For M/D/P PayeeID must equal OrganizationIdentifier; for R differ
@@ -174,16 +169,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "payeeid_orgid_pair",
             "PayeeID must match OrganizationIdentifier for M, D and P records",
-            lambda: _c("PayeeID") == _c("OrganizationIdentifier"),
-            applies_when=_is_mdp,
+            "PayeeID = OrganizationIdentifier",
+            applies_when=_MDP,
         )
     )
     add(
         Rule(
             "payeeid_orgid_r_differ",
             "PayeeID must differ from OrganizationIdentifier for R records",
-            lambda: _c("PayeeID") != _c("OrganizationIdentifier"),
-            applies_when=_is_r,
+            "PayeeID != OrganizationIdentifier",
+            applies_when=_IS_R,
         )
     )
     # R4 OrganizationIdentifier 3-12 alnum (GEN:71).
@@ -191,9 +186,9 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationidentifier_format",
             "OrganizationIdentifier must be 3 to 12 alphanumeric characters",
-            lambda: F.length("OrganizationIdentifier").between(3, 12)
-            & only_chars("OrganizationIdentifier", ALNUM_CHARS)
-            & not_blank("OrganizationIdentifier"),
+            "length(OrganizationIdentifier) BETWEEN 3 AND 12"
+            f" AND {only_chars('OrganizationIdentifier', ALNUM_CHARS)}"
+            f" AND {not_blank('OrganizationIdentifier')}",
         )
     )
     # R5 Organization names <=40, safe charset (GEN:67-68).
@@ -201,17 +196,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationname_format",
             "OrganizationName must be at most 40 characters without special characters",
-            lambda: not_blank("OrganizationName")
-            & (F.length("OrganizationName") <= 40)
-            & charset_ok("OrganizationName"),
+            f"{not_blank('OrganizationName')} AND length(OrganizationName) <= 40"
+            f" AND {charset_ok('OrganizationName')}",
         )
     )
     add(
         Rule(
             "organizationlegalname_format",
             "OrganizationLegalName must be at most 40 characters without special characters",
-            lambda: (F.length(F.coalesce(_c("OrganizationLegalName"), F.lit(""))) <= 40)
-            & charset_ok("OrganizationLegalName"),
+            "length(coalesce(OrganizationLegalName, '')) <= 40"
+            f" AND {charset_ok('OrganizationLegalName')}",
         )
     )
     # R6 OrganizationTIN: 9 digits; required for D/P; blank for R handled by R22
@@ -220,16 +214,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationtin_required_dp",
             "OrganizationTIN is required for D and P records",
-            lambda: not_blank("OrganizationTIN"),
-            applies_when=lambda: _org().isin("D", "P"),
+            not_blank("OrganizationTIN"),
+            applies_when=_DP,
         )
     )
     add(
         Rule(
             "organizationtin_format",
             "OrganizationTIN must be 9 numeric digits",
-            lambda: digits_exactly("OrganizationTIN", 9),
-            applies_when=lambda: _is_mdp() & not_blank("OrganizationTIN"),
+            digits_exactly("OrganizationTIN", 9),
+            applies_when=f"{_MDP} AND {not_blank('OrganizationTIN')}",
         )
     )
     # R7 OrganizationTINType enum EIN/SSN for non-R (evidence strings, GEN:216-219).
@@ -237,24 +231,24 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationtintype_length",
             MSG_TINTYPE_LENGTH,
-            lambda: F.length("OrganizationTINType") == 3,
-            applies_when=lambda: _is_mdp() & not_blank("OrganizationTINType"),
+            "length(OrganizationTINType) = 3",
+            applies_when=f"{_MDP} AND {not_blank('OrganizationTINType')}",
         )
     )
     add(
         Rule(
             "organizationtintype_enum",
             MSG_TINTYPE_INVALID,
-            lambda: _c("OrganizationTINType").isin("EIN", "SSN"),
-            applies_when=lambda: _is_mdp() & not_blank("OrganizationTINType"),
+            "OrganizationTINType IN ('EIN', 'SSN')",
+            applies_when=f"{_MDP} AND {not_blank('OrganizationTINType')}",
         )
     )
     add(
         Rule(
             "organizationtintype_required_dp",
             "OrganizationTINType is required for D and P records",
-            lambda: not_blank("OrganizationTINType"),
-            applies_when=lambda: _org().isin("D", "P"),
+            not_blank("OrganizationTINType"),
+            applies_when=_DP,
         )
     )
     # R8 ProfitNonprofit enum {P, NP}; required for D/P (GEN:139, 411-417;
@@ -264,16 +258,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "profitnonprofit_enum",
             "ProfitNonprofit must be P or NP",
-            lambda: _c("ProfitNonprofit").isin("P", "NP"),
-            applies_when=lambda: _is_mdp() & not_blank("ProfitNonprofit"),
+            "ProfitNonprofit IN ('P', 'NP')",
+            applies_when=f"{_MDP} AND {not_blank('ProfitNonprofit')}",
         )
     )
     add(
         Rule(
             "profitnonprofit_required_dp",
             "ProfitNonprofit is required for D and P records",
-            lambda: not_blank("ProfitNonprofit"),
-            applies_when=lambda: _org().isin("D", "P"),
+            not_blank("ProfitNonprofit"),
+            applies_when=_DP,
         )
     )
     # R9 OrganizationNPI: optional; 10 digits, first non-zero (GEN:251-255).
@@ -281,9 +275,9 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "organizationnpi_format",
             "OrganizationNPI must be 10 numeric digits starting with a non-zero digit",
-            lambda: digits_exactly("OrganizationNPI", 10)
-            & ~_c("OrganizationNPI").startswith("0"),
-            applies_when=lambda: not_blank("OrganizationNPI"),
+            f"{digits_exactly('OrganizationNPI', 10)}"
+            " AND NOT startswith(OrganizationNPI, '0')",
+            applies_when=not_blank("OrganizationNPI"),
         )
     )
     # R10 PaymentMode enum {EFT, CHK} (GEN:141; M records are EFT GEN:332-336).
@@ -291,8 +285,8 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "paymentmode_enum",
             "PaymentMode must be EFT or CHK",
-            lambda: _mode().isin("EFT", "CHK"),
-            applies_when=_is_mdp,
+            "PaymentMode IN ('EFT', 'CHK')",
+            applies_when=_MDP,
         )
     )
     # R11 RoutingTransitNumber — the most-attested rule pair; messages are
@@ -301,24 +295,24 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "routingtransitnumber_9_digits",
             MSG_RTN_9_DIGITS,
-            lambda: F.length("RoutingTransitNumber") == 9,
-            applies_when=lambda: _is_mdp() & (_mode() == "EFT"),
+            "length(RoutingTransitNumber) = 9",
+            applies_when=_EFT,
         )
     )
     add(
         Rule(
             "routingtransitnumber_numeric_eft",
             MSG_RTN_NUMERIC_EFT,
-            lambda: digits_exactly("RoutingTransitNumber", 9),
-            applies_when=lambda: _is_mdp() & (_mode() == "EFT"),
+            digits_exactly("RoutingTransitNumber", 9),
+            applies_when=_EFT,
         )
     )
     add(
         Rule(
             "routingtransitnumber_chk_blank",
             MSG_CHK_RTN_BLANK,
-            lambda: is_blank("RoutingTransitNumber"),
-            applies_when=lambda: _is_mdp() & (_mode() == "CHK"),
+            is_blank("RoutingTransitNumber"),
+            applies_when=_CHK,
         )
     )
     # R12 AccountNumber: EFT => required numeric 2..17; CHK => blank
@@ -328,16 +322,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "accountnumber_eft_format",
             "AccountNumber must be 2 to 17 numeric digits for EFT records",
-            lambda: digits_between("AccountNumber", 2, 17),
-            applies_when=lambda: _is_mdp() & (_mode() == "EFT"),
+            digits_between("AccountNumber", 2, 17),
+            applies_when=_EFT,
         )
     )
     add(
         Rule(
             "accountnumber_chk_blank",
             "For PaymentMode CHK, AccountNumber must be blank",
-            lambda: is_blank("AccountNumber"),
-            applies_when=lambda: _is_mdp() & (_mode() == "CHK"),
+            is_blank("AccountNumber"),
+            applies_when=_CHK,
         )
     )
     # R13 AccountType: EFT => enum CHKING/SAVING; CHK => blank
@@ -346,16 +340,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "accounttype_eft_enum",
             "AccountType must be CHKING or SAVING for EFT records",
-            lambda: _c("AccountType").isin("CHKING", "SAVING"),
-            applies_when=lambda: _is_mdp() & (_mode() == "EFT"),
+            "AccountType IN ('CHKING', 'SAVING')",
+            applies_when=_EFT,
         )
     )
     add(
         Rule(
             "accounttype_chk_blank",
             "For PaymentMode CHK, AccountType must be blank",
-            lambda: is_blank("AccountType"),
-            applies_when=lambda: _is_mdp() & (_mode() == "CHK"),
+            is_blank("AccountType"),
+            applies_when=_CHK,
         )
     )
     # R14 EffectiveStartDate required, yyyy-MM-dd (GEN:161-174).
@@ -363,16 +357,16 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "effectivestartdate_required",
             "EffectiveStartDate is required",
-            lambda: not_blank("EffectiveStartDate"),
-            applies_when=_is_mdp,
+            not_blank("EffectiveStartDate"),
+            applies_when=_MDP,
         )
     )
     add(
         Rule(
             "effectivestartdate_format",
             "EffectiveStartDate must be a valid date in YYYY-MM-DD format",
-            lambda: _date_ok("EffectiveStartDate"),
-            applies_when=lambda: not_blank("EffectiveStartDate"),
+            _date_ok("EffectiveStartDate"),
+            applies_when=not_blank("EffectiveStartDate"),
         )
     )
     # R15 EffectiveEndDate optional; format when present; end >= start.
@@ -386,20 +380,20 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "effectiveenddate_format",
             "EffectiveEndDate must be a valid date in YYYY-MM-DD format",
-            lambda: _date_ok("EffectiveEndDate"),
-            applies_when=lambda: not_blank("EffectiveEndDate"),
+            _date_ok("EffectiveEndDate"),
+            applies_when=not_blank("EffectiveEndDate"),
         )
     )
     add(
         Rule(
             "effectiveenddate_after_start",
             "EffectiveEndDate must not be before EffectiveStartDate",
-            lambda: F.try_to_date(_c("EffectiveEndDate").cast("string"))
-            >= F.try_to_date(_c("EffectiveStartDate").cast("string")),
-            applies_when=lambda: not_blank("EffectiveEndDate")
-            & not_blank("EffectiveStartDate")
-            & _date_ok("EffectiveEndDate")
-            & _date_ok("EffectiveStartDate"),
+            "try_to_date(CAST(EffectiveEndDate AS STRING))"
+            " >= try_to_date(CAST(EffectiveStartDate AS STRING))",
+            applies_when=f"{not_blank('EffectiveEndDate')}"
+            f" AND {not_blank('EffectiveStartDate')}"
+            f" AND {_date_ok('EffectiveEndDate')}"
+            f" AND {_date_ok('EffectiveStartDate')}",
         )
     )
     # R16 AddressCode enum {PMT, COR}; D/P pairing with PaymentMode
@@ -408,19 +402,18 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "addresscode_enum",
             "AddressCode must be PMT or COR",
-            lambda: _c("AddressCode").isin("PMT", "COR"),
-            applies_when=lambda: _is_mdp() & not_blank("AddressCode"),
+            "AddressCode IN ('PMT', 'COR')",
+            applies_when=f"{_MDP} AND {not_blank('AddressCode')}",
         )
     )
     add(
         Rule(
             "addresscode_dp_paymentmode_pair",
             "AddressCode must be PMT for CHK and COR for EFT on D and P records",
-            lambda: ((_mode() == "CHK") & (_c("AddressCode") == "PMT"))
-            | ((_mode() == "EFT") & (_c("AddressCode") == "COR")),
-            applies_when=lambda: _org().isin("D", "P")
-            & not_blank("AddressCode")
-            & _mode().isin("EFT", "CHK"),
+            "(PaymentMode = 'CHK' AND AddressCode = 'PMT')"
+            " OR (PaymentMode = 'EFT' AND AddressCode = 'COR')",
+            applies_when=f"{_DP} AND {not_blank('AddressCode')}"
+            " AND PaymentMode IN ('EFT', 'CHK')",
         )
     )
     # R17 State: exactly 2 characters, letters (format-only,
@@ -429,8 +422,8 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "state_format",
             "State must be exactly 2 characters",
-            lambda: (F.length("State") == 2) & only_chars("State", ALPHA_CHARS),
-            applies_when=lambda: not_blank("State"),
+            f"length(State) = 2 AND {only_chars('State', ALPHA_CHARS)}",
+            applies_when=not_blank("State"),
         )
     )
     # R18 PostalCode 5-10 alphanumeric (tests/test_postalcode_invalid_length.py).
@@ -438,9 +431,9 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "postalcode_format",
             "PostalCode must be 5 to 10 alphanumeric characters",
-            lambda: F.length("PostalCode").between(5, 10)
-            & only_chars("PostalCode", ALNUM_CHARS),
-            applies_when=lambda: not_blank("PostalCode"),
+            "length(PostalCode) BETWEEN 5 AND 10"
+            f" AND {only_chars('PostalCode', ALNUM_CHARS)}",
+            applies_when=not_blank("PostalCode"),
         )
     )
     # R19 CityName <=25, safe charset (GEN:56).
@@ -448,8 +441,8 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "cityname_format",
             "CityName must be at most 25 characters without special characters",
-            lambda: (F.length("CityName") <= 25) & charset_ok("CityName"),
-            applies_when=lambda: not_blank("CityName"),
+            f"length(CityName) <= 25 AND {charset_ok('CityName')}",
+            applies_when=not_blank("CityName"),
         )
     )
     # R20 contact fields (tests/test_contact_required_format_rules_combined.py,
@@ -458,50 +451,50 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "contactfirstname_required_dp",
             "ContactFirstName is required for D and P records",
-            lambda: not_blank("ContactFirstName"),
-            applies_when=lambda: _org().isin("D", "P"),
+            not_blank("ContactFirstName"),
+            applies_when=_DP,
         )
     )
     add(
         Rule(
             "contactlastname_required_dp",
             "ContactLastName is required for D and P records",
-            lambda: not_blank("ContactLastName"),
-            applies_when=lambda: _org().isin("D", "P"),
+            not_blank("ContactLastName"),
+            applies_when=_DP,
         )
     )
     add(
         Rule(
             "contactfirstname_format",
             "ContactFirstName must be at most 20 characters without digits or special characters",
-            lambda: (F.length("ContactFirstName") <= 20)
-            & charset_ok("ContactFirstName", NAME_CHARSET_RE),
-            applies_when=lambda: not_blank("ContactFirstName"),
+            "length(ContactFirstName) <= 20"
+            f" AND {charset_ok('ContactFirstName', NAME_CHARSET_RE)}",
+            applies_when=not_blank("ContactFirstName"),
         )
     )
     add(
         Rule(
             "contactlastname_format",
             "ContactLastName must be at most 25 characters without digits or special characters",
-            lambda: (F.length("ContactLastName") <= 25)
-            & charset_ok("ContactLastName", NAME_CHARSET_RE),
-            applies_when=lambda: not_blank("ContactLastName"),
+            "length(ContactLastName) <= 25"
+            f" AND {charset_ok('ContactLastName', NAME_CHARSET_RE)}",
+            applies_when=not_blank("ContactLastName"),
         )
     )
     add(
         Rule(
             "contactcode_format",
             "ContactCode must be at most 2 characters",
-            lambda: F.length("ContactCode") <= 2,
-            applies_when=lambda: not_blank("ContactCode"),
+            "length(ContactCode) <= 2",
+            applies_when=not_blank("ContactCode"),
         )
     )
     add(
         Rule(
             "contacttitle_format",
             "ContactTitle must be at most 23 characters",
-            lambda: F.length("ContactTitle") <= 23,
-            applies_when=lambda: not_blank("ContactTitle"),
+            "length(ContactTitle) <= 23",
+            applies_when=not_blank("ContactTitle"),
         )
     )
     for phone in ("ContactPhone", "ContactFax", "ContactOtherPhone"):
@@ -509,8 +502,8 @@ def bankdata_rules() -> list[Rule]:
             Rule(
                 f"{phone.lower()}_format",
                 f"{phone} must be at most 25 characters with digits and separators only",
-                lambda p=phone: (F.length(p) <= 25) & charset_ok(p, PHONE_CHARSET_RE),
-                applies_when=lambda p=phone: not_blank(p),
+                f"length({phone}) <= 25 AND {charset_ok(phone, PHONE_CHARSET_RE)}",
+                applies_when=not_blank(phone),
             )
         )
     add(
@@ -519,8 +512,8 @@ def bankdata_rules() -> list[Rule]:
             "ContactEmail must be at most 99 characters",
             # Length-only validation, no RFC format check
             # (tests/test_contactemail_over_max_length.py:7-8).
-            lambda: F.length("ContactEmail") <= 99,
-            applies_when=lambda: not_blank("ContactEmail"),
+            "length(ContactEmail) <= 99",
+            applies_when=not_blank("ContactEmail"),
         )
     )
     # R21 shared special-character rejection across core fields
@@ -533,8 +526,8 @@ def bankdata_rules() -> list[Rule]:
             Rule(
                 f"{core.lower()}_charset",
                 f"{core} must not contain special characters",
-                lambda c=core: only_chars(c, ALNUM_CHARS + " "),
-                applies_when=lambda c=core: not_blank(c),
+                only_chars(core, ALNUM_CHARS + " "),
+                applies_when=not_blank(core),
             )
         )
     # R22 OrgCode R row shape — verbatim evidence string
@@ -543,18 +536,11 @@ def bankdata_rules() -> list[Rule]:
         Rule(
             "orgcode_r_all_blank",
             MSG_R_ALL_BLANK,
-            lambda: _all_blank(R_BLANK_FIELDS),
-            applies_when=_is_r,
+            " AND ".join(is_blank(f_) for f_ in R_BLANK_FIELDS),
+            applies_when=_IS_R,
         )
     )
     return rules
-
-
-def _all_blank(fields: tuple[str, ...]) -> Column:
-    cond = F.lit(True)
-    for f_ in fields:
-        cond = cond & is_blank(f_)
-    return cond
 
 
 def compile_rules(rules: list[Rule]) -> Column:
@@ -566,46 +552,8 @@ def compile_rules(rules: list[Rule]) -> Column:
     containing this expression evaluates interpreted. Keep it off the
     hot filter path (see ``compile_any_violation``).
     """
-    return F.array_compact(F.array(*[r.error_expr() for r in rules]))
-
-
-#: Per-process memo of the compiled default catalog. Building the ~55
-#: violation Columns crosses py4j ~20k times (~2.5 s of driver chatter
-#: per call, measured r13) although the handles are static, immutable
-#: expression trees independent of any DataFrame or SparkSession (the
-#: py4j JVM outlives session stop/start in-process). This memoizes
-#: EXPRESSIONS only — never data or results; every query run still
-#: evaluates the catalog from its inputs.
-#: Keyed on the py4j gateway identity so a gateway relaunch rebuilds
-#: the handles instead of serving stale JavaObjects (ADVICE r13).
-_DEFAULT_VIOLATIONS: dict[int, list[tuple[str, Column]]] = {}
-_DEFAULT_ERRORS_ARRAY: dict[int, Column] = {}
-
-
-def compiled_bankdata_violations() -> list[tuple[str, Column]]:
-    """(message, violation Column) per default-catalog rule, memoized."""
-    from etl_validator_github_spark.plans.session import gateway_token
-
-    tok = gateway_token()
-    got = _DEFAULT_VIOLATIONS.get(tok)
-    if got is None:
-        got = _DEFAULT_VIOLATIONS[tok] = [
-            (r.message, r.violation_expr()) for r in bankdata_rules()
-        ]
-    return got
-
-
-def compiled_bankdata_errors() -> Column:
-    """``compile_rules(bankdata_rules())``, memoized per process."""
-    from etl_validator_github_spark.plans.session import gateway_token
-
-    tok = gateway_token()
-    got = _DEFAULT_ERRORS_ARRAY.get(tok)
-    if got is None:
-        got = _DEFAULT_ERRORS_ARRAY[tok] = F.array_compact(F.array(*[
-            F.when(v, F.lit(m)) for m, v in compiled_bankdata_violations()
-        ]))
-    return got
+    errors = ", ".join(r.error_sql() for r in rules)
+    return F.expr(f"array_compact(array({errors}))")
 
 
 def compile_any_violation(rules: list[Rule]) -> Column:
@@ -620,10 +568,4 @@ def compile_any_violation(rules: list[Rule]) -> Column:
     regex-dominated either way) and doubles planning time; see
     ``validate.failing_records``.
     """
-    out: Column | None = None
-    for r in rules:
-        v = r.violation_expr()
-        out = v if out is None else out | v
-    if out is None:
-        return F.lit(False)
-    return out
+    return F.expr(" OR ".join(r.violation_sql() for r in rules) or "false")

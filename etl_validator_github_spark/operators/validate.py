@@ -2,22 +2,23 @@
 
 The physical design choice from SURVEY.md §4: evaluate the ENTIRE rule
 catalog in one projection producing an ``array<string>`` column — one scan,
-no per-rule shuffles, whole-stage codegen applies. At 100 TB this is a
-map-only stage; the only shuffle in the pipeline is the final per-payee
-aggregation in operators/errors.py.
+no per-rule shuffles. That projection runs outside whole-stage codegen
+(``array_compact`` lowers to a lambda; see ``rules.compile_rules``), while
+``summarize_rule_violations`` keeps its per-rule counters inside it. At
+100 TB this is a map-only stage; the only shuffle in the pipeline is the
+final per-payee aggregation in operators/errors.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_validator_github_spark.functions.core import sql_str
 from etl_validator_github_spark.operators.rules import (
     Rule,
-    compile_any_violation,
+    bankdata_rules,
     compile_rules,
-    compiled_bankdata_errors,
-    compiled_bankdata_violations,
 )
 from etl_validator_github_spark.schema import schema_diff
 
@@ -31,10 +32,7 @@ def with_errors(
 ) -> DataFrame:
     """Append an ``array<string>`` column of rule-violation messages."""
     if rules is None:
-        # Memoized expression handles for the default catalog: building
-        # the tree costs ~20k py4j round trips (~2.5 s/call, r13) while
-        # the Columns are static — see rules.compiled_bankdata_errors.
-        return df.withColumn(errors_col, compiled_bankdata_errors())
+        rules = bankdata_rules()
     return df.withColumn(errors_col, compile_rules(rules))
 
 
@@ -75,65 +73,31 @@ def summarize_rule_violations(
     exploded row. Here each rule compiles to ONE ``sum(violation)``
     counter in a single map-side aggregation — no array, no Generate,
     codegen end to end, and the shuffle carries one partial row per
-    task. Messages shared by several rules are re-merged by the final
-    (≤ |rules| rows) groupBy; zero-count messages are dropped, matching
+    task. Counters of rules that share a message are added together in
+    the same aggregation; ``inline`` unpivots the one result row into
+    (message, count) rows, and zero-count messages are dropped, matching
     the explode form exactly.
     """
     if rules is None:
-        aggs, pairs = _default_summary_exprs()  # memoized handles (r13)
-    else:
-        if not rules:
-            # df.agg() with zero aggregates raises; the pre-r13
-            # explode form returned an empty frame here (ADVICE r13).
-            return df.sparkSession.createDataFrame(
-                [], "error_desc string, error_count bigint"
-            )
-        comp = [(r.message, r.violation_expr()) for r in rules]
-        aggs, pairs = _summary_exprs(comp)
-    counts = df.agg(*aggs)
+        rules = bankdata_rules()
+    if not rules:
+        # Nothing to count: the explode form returned an empty frame.
+        return df.sparkSession.createDataFrame(
+            [], "error_desc string, error_count bigint"
+        )
+    counts: dict[str, list[str]] = {}
+    for r in rules:
+        counts.setdefault(r.message, []).append(
+            f"sum(CAST({r.violation_sql()} AS BIGINT))")
+    pairs = ", ".join(
+        f"struct({sql_str(m)} AS error_desc, {' + '.join(sums)} AS error_count)"
+        for m, sums in counts.items()
+    )
     return (
-        counts.select(F.explode(pairs).alias("p"))
-        .select("p.error_desc", "p.error_count")
-        .groupBy("error_desc")
-        .agg(F.sum("error_count").alias("error_count"))
-        .filter(F.col("error_count") > 0)
+        df.select(F.expr(f"inline(array({pairs}))"))
+        .filter("error_count > 0")
         .orderBy("error_desc")
     )
-
-
-def _summary_exprs(
-    comp: list[tuple[str, Column]],
-) -> tuple[list[Column], Column]:
-    """(per-rule sum aggregates, message/count unpivot array) for
-    ``summarize_rule_violations``."""
-    aggs = [
-        F.sum(v.cast("long")).alias(f"_r{i}")
-        for i, (_, v) in enumerate(comp)
-    ]
-    pairs = F.array(*[
-        F.struct(F.lit(m).alias("error_desc"),
-                 F.col(f"_r{i}").alias("error_count"))
-        for i, (m, _) in enumerate(comp)
-    ])
-    return aggs, pairs
-
-
-#: Default-catalog summary expressions, memoized like the violation
-#: handles they wrap (expression-only memo; ~110 Column builds saved
-#: per call). Keyed on the py4j gateway identity so a gateway relaunch
-#: rebuilds the handles (ADVICE r13).
-_DEFAULT_SUMMARY: dict[int, tuple[list[Column], Column]] = {}
-
-
-def _default_summary_exprs() -> tuple[list[Column], Column]:
-    from etl_validator_github_spark.plans.session import gateway_token
-
-    tok = gateway_token()
-    got = _DEFAULT_SUMMARY.get(tok)
-    if got is None:
-        got = _DEFAULT_SUMMARY[tok] = _summary_exprs(
-            compiled_bankdata_violations())
-    return got
 
 
 def validate_schema(df: DataFrame) -> dict[str, list[str]]:

@@ -43,17 +43,3 @@ def explain_str(df) -> str:
         df._jdf.queryExecution(), "formatted"
     )
 
-
-def gateway_token() -> int:
-    """Identity of the live py4j gateway (0 before any JVM launch).
-
-    Module-level memos of py4j-backed Column handles (rules/generator/
-    validate/validation, r13) must key on this: the cached JavaObject
-    handles go stale — failing with opaque py4j errors — if the gateway
-    is ever shut down and relaunched within one interpreter (ADVICE
-    r13). A stale entry is simply rebuilt under the new token.
-    """
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway  # noqa: SLF001
-    return id(gw) if gw is not None else 0

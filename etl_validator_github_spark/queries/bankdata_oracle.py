@@ -35,6 +35,7 @@ from etl_validator_github_spark.functions.core import (
     SAFE_CHARS,
 )
 from etl_validator_github_spark.generator import (
+    id_hash_sql,
     _CITIES,
     _FIRST_NAMES,
     _LAST_NAMES,
@@ -79,13 +80,14 @@ _INJ_KEY_K = 100  # h() stream index reserved for the injection key
 _MOD = 2147483647
 
 
+def injection_key_sql(seed: int) -> str:
+    """Spark SQL mirror of the oracle's injection key: h(100) % 1000 over id."""
+    return f"{id_hash_sql(_INJ_KEY_K, seed)} % 1000"
+
+
 def injection_key_expr(seed: int) -> Column:
-    """Spark mirror of the oracle's injection key: h(100) % 1000 over id."""
-    a = 2654435761 + 40503 * _INJ_KEY_K
-    b = 97 * _INJ_KEY_K
-    return F.pmod(
-        (F.col("id") + F.lit(seed)) * F.lit(a) + F.lit(b), F.lit(_MOD)
-    ) % 1000
+    """``injection_key_sql`` as a Column."""
+    return F.expr(injection_key_sql(seed))
 
 
 # --------------------------------------------------------------------------
@@ -94,8 +96,8 @@ def injection_key_expr(seed: int) -> Column:
 
 
 def _h(k: int, seed: int) -> str:
-    """SQL mirror of generator._h — all operands positive, so DuckDB's %
-    equals Spark's pmod."""
+    """DuckDB mirror of generator.id_hash_sql — all operands positive, so
+    DuckDB's % equals Spark's pmod."""
     a = 2654435761 + 40503 * k
     b = 97 * k
     return f"(((id + {seed}) * {a} + {b}) % {_MOD})"
@@ -114,8 +116,9 @@ def _arr(pool: tuple[str, ...], idx_sql: str) -> str:
 def _generator_sql(n: int, seed: int, as_of: str) -> str:
     """Regenerate generate_bankdata_distributed(n, seed) in DuckDB SQL.
 
-    Field-for-field mirror of generator.py:282-315; layered CTEs stand in
-    for Spark's nested column expressions (org/mode feed later fields).
+    Field-for-field mirror of generator._build_bankdata_columns; layered
+    CTEs stand in for Spark's nested column expressions (org/mode feed
+    later fields).
     """
     h = lambda k: _h(k, seed)  # noqa: E731
     return f"""

@@ -24,10 +24,11 @@ from etl_validator_github_spark.generator import generate_bankdata_distributed
 from etl_validator_github_spark.queries.bankdata_oracle import (
     INJECTIONS,
     bankdata_oracle_sql,
-    injection_key_expr,
+    injection_key_sql,
 )
 from etl_validator_github_spark.operators.reconcile import reconcile_errors
-from etl_validator_github_spark.operators.rules import Rule, compile_rules
+from etl_validator_github_spark.functions.core import sql_str
+from etl_validator_github_spark.operators.rules import Rule
 from etl_validator_github_spark.operators.validate import (
     failing_records,
     summarize_rule_violations,
@@ -46,16 +47,14 @@ _SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
 
 def customer_rules() -> list[Rule]:
+    segments = ", ".join(sql_str(s) for s in _SEGMENTS)
     return [
-        Rule("acctbal_nonnegative", _MSG_NEG,
-             lambda: F.col("c_acctbal") >= 0),
+        Rule("acctbal_nonnegative", _MSG_NEG, "c_acctbal >= 0"),
         Rule("name_format", _MSG_NAME,
-             lambda: F.col("c_name").rlike(r"^Customer#[0-9]{9}$")),
-        Rule("segment_enum", _MSG_SEG,
-             lambda: F.col("c_mktsegment").isin(*_SEGMENTS)),
-        Rule("building_min_balance", _MSG_BUILDING,
-             lambda: F.col("c_acctbal") >= 100,
-             applies_when=lambda: F.col("c_mktsegment") == "BUILDING"),
+             "c_name RLIKE " + sql_str(r"^Customer#[0-9]{9}$")),
+        Rule("segment_enum", _MSG_SEG, f"c_mktsegment IN ({segments})"),
+        Rule("building_min_balance", _MSG_BUILDING, "c_acctbal >= 100",
+             applies_when="c_mktsegment = 'BUILDING'"),
     ]
 
 
@@ -204,29 +203,16 @@ FROM csv_tok c FULL OUTER JOIN db_tok d ON c.payee_id = d.payee_id
 # cross-engine recomputation, no staged files.
 # ---------------------------------------------------------------------------
 
-#: Memoized injection-override projection (see generator._BANKDATA_COLS
-#: for the rationale: static Column handles, expression-only memo;
-#: keyed on the py4j gateway identity — ADVICE r13).
-_INJECT_COLS: dict[tuple[int, int, tuple[str, ...]], list[F.Column]] = {}
 
-
-def _injected_columns(seed: int, cols: tuple[str, ...]) -> list[F.Column]:
-    from etl_validator_github_spark.plans.session import gateway_token
-
-    memo_key = (gateway_token(), seed, cols)
-    out = _INJECT_COLS.get(memo_key)
-    if out is None:
-        key = injection_key_expr(seed=seed)
-        overrides: dict[str, F.Column] = {}
-        for lo, hi, col, val in INJECTIONS:
-            base = overrides.get(col, F.col(col))
-            overrides[col] = (
-                F.when(key.between(lo, hi), F.lit(val)).otherwise(base)
-            )
-        out = _INJECT_COLS[memo_key] = [
-            overrides.get(c, F.col(c)).alias(c) for c in cols if c != "id"
-        ]
-    return out
+def _injected_columns(seed: int, cols: tuple[str, ...]) -> list[str]:
+    """``cols`` minus ``id``, with the ``INJECTIONS`` overrides, as SQL
+    ``<expr> AS <name>`` items."""
+    key = injection_key_sql(seed)
+    overrides: dict[str, str] = {}
+    for lo, hi, col, val in INJECTIONS:
+        overrides[col] = (f"CASE WHEN {key} BETWEEN {lo} AND {hi} THEN "
+                          f"{sql_str(val)} ELSE {overrides.get(col, col)} END")
+    return [f"{overrides.get(c, c)} AS {c}" for c in cols if c != "id"]
 
 
 def _bankdata_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +231,7 @@ def _bankdata_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generate+inject projection grows only linearly and plans fine
     # without a barrier in between (measured: one barrier is ~1.3 s
     # faster per run than two at n=200k).
-    df = df.select(*_injected_columns(246, tuple(df.columns)))
+    df = df.selectExpr(*_injected_columns(246, tuple(df.columns)))
     # Lineage barrier AFTER injection: without it Catalyst inlines the
     # generate+inject CASE trees into every one of the ~50 rule
     # expressions and the optimizer blows up super-linearly (observed:

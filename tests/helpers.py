@@ -8,6 +8,9 @@ the precise error list for each.
 
 from __future__ import annotations
 
+import contextlib
+import types
+
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_validator_github_spark.operators.validate import ERRORS_COL, with_errors
@@ -87,3 +90,23 @@ def errors_for(spark: SparkSession, rows: list[dict]) -> list[list[str]]:
     df = make_df(spark, tagged)
     out = with_errors(df).select("PayeeID", ERRORS_COL).collect()
     return [row[ERRORS_COL] for row in out]
+
+
+@contextlib.contextmanager
+def count_gateway_calls(spark: SparkSession):
+    """Count py4j round trips made inside the block, in ``.calls``.
+    Object releases are left out: Python's GC sends them at random times."""
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    send = client.send_command
+    counter = types.SimpleNamespace(calls=0)
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            counter.calls += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counter
+    finally:
+        client.send_command = send

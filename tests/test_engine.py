@@ -23,7 +23,7 @@ from etl_validator_github_spark.operators.validate import (
 )
 from etl_validator_github_spark.pipeline import validate_file
 from etl_validator_github_spark.schema import COLUMNS, R_KEEP_FIELDS
-from tests.helpers import VALID_D_CHK, VALID_M_EFT, make_df
+from tests.helpers import VALID_D_CHK, VALID_M_EFT, count_gateway_calls, make_df
 
 
 def test_generated_data_is_rule_valid(spark):
@@ -410,9 +410,9 @@ def test_rule_counter_summary_equals_explode_form(spark):
         [Row(x=1, y=10), Row(x=-1, y=10), Row(x=2, y=-5), Row(x=-3, y=-7)]
     )
     rules = [
-        Rule("x_pos", "value out of range", lambda: F.col("x") >= 0),
-        Rule("y_pos", "value out of range", lambda: F.col("y") >= 0),
-        Rule("x_small", "x too large", lambda: F.col("x") <= 1),
+        Rule("x_pos", "value out of range", "x >= 0"),
+        Rule("y_pos", "value out of range", "y >= 0"),
+        Rule("x_small", "x too large", "x <= 1"),
     ]
     fast = [r.asDict()
             for r in summarize_rule_violations(toy, rules=rules).collect()]
@@ -428,3 +428,85 @@ def test_rule_counter_summary_equals_explode_form(spark):
     empty = summarize_rule_violations(toy, rules=[])
     assert empty.columns == ["error_desc", "error_count"]
     assert empty.collect() == []
+
+
+def test_sql_str_round_trips_quotes_and_backslashes(spark):
+    """A rule message and a predicate literal holding both ' and \\ come
+    back from with_errors unchanged."""
+    from etl_validator_github_spark.functions.core import sql_str
+    from etl_validator_github_spark.operators.rules import Rule
+
+    odd = "it's C:\\temp\\'x'\\d+\\\\"
+    msg = "can't hold \\ or '\\n'"
+    df = spark.createDataFrame([(odd,), ("plain",)], "s string")
+    rules = [Rule("odd_value", msg, f"s != {sql_str(odd)}")]
+    got = {r["s"]: r[ERRORS_COL] for r in with_errors(df, rules=rules).collect()}
+    assert got == {odd: [msg], "plain": []}
+
+
+def test_rule_engine_gateway_calls_stay_few(spark):
+    """Building the catalog, summary and generator projections is a
+    handful of py4j round trips on every call, cached or not (a
+    Column-at-a-time build of the same catalog costs thousands)."""
+    from etl_validator_github_spark.operators.rules import bankdata_rules
+    from etl_validator_github_spark.operators.validate import (
+        summarize_rule_violations,
+    )
+
+    df = generate_bankdata(spark, 20, seed=246)
+    for seed in (4241, 4242):
+        with count_gateway_calls(spark) as default:
+            with_errors(df)
+        with count_gateway_calls(spark) as explicit:
+            with_errors(df, rules=bankdata_rules())
+        with count_gateway_calls(spark) as summary:
+            summarize_rule_violations(df)
+        with count_gateway_calls(spark) as summary_explicit:
+            summarize_rule_violations(df, rules=bankdata_rules())
+        with count_gateway_calls(spark) as gen:
+            generate_bankdata_distributed(spark, 100, seed=seed)
+        assert default.calls <= 20 and explicit.calls <= 20
+        assert summary.calls <= 60 and summary_explicit.calls <= 60
+        assert gen.calls <= 80
+
+
+def test_no_module_holds_spark_handles(spark, sf_dir):
+    """No package module keeps py4j-backed state between calls: after a
+    generate -> validate -> summarize -> bankdata_validate run, no global
+    dict, list or tuple holds a Column or JavaObject."""
+    import sys
+
+    from py4j.java_gateway import JavaObject
+    from pyspark.sql import Column
+
+    from etl_validator_github_spark.operators.validate import (
+        summarize_rule_violations,
+    )
+    from etl_validator_github_spark.queries.validation import VALIDATION_QUERIES
+
+    df = generate_bankdata_distributed(spark, 200)
+    with_errors(df).collect()
+    summarize_rule_violations(df).collect()
+    assert VALIDATION_QUERIES["bankdata_validate"].build(spark, sf_dir).count() > 0
+
+    def holds_handle(obj, depth=0) -> bool:
+        if isinstance(obj, (Column, JavaObject)):
+            return True
+        if depth > 4:
+            return False
+        if isinstance(obj, dict):
+            items = [*obj.keys(), *obj.values()]
+        elif isinstance(obj, (list, tuple)):
+            items = obj
+        else:
+            return False
+        return any(holds_handle(x, depth + 1) for x in items)
+
+    held = [
+        f"{name}.{attr}"
+        for name, mod in list(sys.modules.items())
+        if name.startswith("etl_validator_github_spark") and mod is not None
+        for attr, value in vars(mod).items()
+        if isinstance(value, (dict, list, tuple)) and holds_handle(value)
+    ]
+    assert held == []
